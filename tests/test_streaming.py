@@ -1323,6 +1323,110 @@ def test_ingest_handler_retry_idempotent(spark, tmp_path):
     assert snapshot() == first
 
 
+def _ingest_fixture(spark, tmp_path):
+    """The curation batches with a ``source`` column (the stats sink
+    groups by it) and the evaluation-suite shingles built from text c."""
+    from video_etl_spark.streaming.decontaminate import doc_shingles
+
+    a, b, c, batches = _curation_batches()
+    doc_shingles(
+        spark.createDataFrame([(99, c)], "doc_id long, text string")
+    ).select("s").distinct().write.parquet(str(tmp_path / "bench"))
+    return [
+        spark.createDataFrame(rows, "doc_id long, text string")
+        .withColumn("source", F.lit("web"))
+        for rows in batches
+    ]
+
+
+def test_ingest_handler_sinks_reuse_the_batch_verdict(
+    spark, tmp_path, monkeypatch
+):
+    """The batch's dedup verdict is computed once.  On a batch with
+    history to probe, every sink written after the first reads the
+    persisted verdict — at most 3 jobs each (broadcast of the rejected
+    ids, one shuffle, the write) — instead of re-running the band
+    self-join and the history probe.  Writing the index before another
+    sink fails this too: a write to a path re-caches every cached plan
+    that reads it, the verdict included."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from video_etl_spark.streaming.curation import make_ingest_handler
+
+    batches = _ingest_fixture(spark, tmp_path)
+    sc = spark.sparkContext
+    writes: list[tuple[str, int]] = []
+    parquet = DataFrameWriter.parquet
+
+    def counted_parquet(self, path, *args, **kwargs):
+        group = f"{tmp_path.name}-sink-{len(writes)}"
+        sc.setJobGroup(group, path)
+        try:
+            return parquet(self, path, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            writes.append((os.path.basename(path), len(jobs)))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted_parquet)
+    handle = make_ingest_handler(
+        str(tmp_path / "sig_index"),
+        str(tmp_path / "bench"),
+        str(tmp_path / "clean"),
+        str(tmp_path / "rejected"),
+        stats_dir=str(tmp_path / "stats"),
+        occupancy_dir=str(tmp_path / "occupancy"),
+    )
+    handle(batches[0], 0)
+    first = len(writes)
+    handle(batches[1], 1)
+    second = writes[first:]
+    assert all(n <= 3 for _, n in second[1:]), second
+    assert [name for name, _ in second] == [
+        "clean", "rejected", "occupancy", "stats", "sig_index"
+    ], second
+
+
+def test_ingest_handler_leaves_nothing_pinned(spark, tmp_path):
+    """Every frame the ingest handler persists for a batch is released
+    when the batch returns AND when a sink write raises.  The baseline
+    is taken after a first batch, because the evaluation-suite shingles
+    stay cached for the handler's lifetime by design."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    from video_etl_spark.streaming.curation import make_ingest_handler
+
+    batches = _ingest_fixture(spark, tmp_path)
+    not_a_dir = tmp_path / "rejected_file"
+    not_a_dir.write_text("a regular file where a sink directory belongs")
+
+    def make(rejected_dir):
+        return make_ingest_handler(
+            str(tmp_path / "sig_index"),
+            str(tmp_path / "bench"),
+            str(tmp_path / "clean"),
+            rejected_dir,
+            stats_dir=str(tmp_path / "stats"),
+        )
+
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    handle = make(str(tmp_path / "rejected"))
+    handle(batches[0], 0)
+    before = pinned()
+    handle(batches[1], 1)
+    assert pinned() == before
+    # the clean sink is written first, so every persisted frame is
+    # materialized by the time the rejected write fails
+    with pytest.raises(Py4JJavaError):
+        make(str(not_a_dir))(batches[2], 2)
+    assert pinned() == before
+
+
 def test_streaming_classify_matches_batch_argmin(spark, sf_dir, tmp_path):
     """Stateless nearest-centroid serving: a 3-micro-batch embedding
     stream classified against literal-folded centroids must equal the
@@ -2691,6 +2795,79 @@ def test_prune_folded_partitions_watermark_driven(spark, tmp_path):
     finally:
         for t in ("t_pr_gen", "t_pr_gen_watermark"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_fold_watermark_sidecar_schema(spark, tmp_path):
+    """Every fold writes the one-row ``{table}_watermark`` sidecar with
+    the schema existing generations were written with (a long
+    watermark, not an int) and the fold's values — the band fold, the
+    band refold and the frame fold — and its readers
+    (``compaction_watermark``, ``prune_folded_partitions``) read it."""
+    from pyspark.sql import Row
+
+    from video_etl_spark.llm_ops.multimodal import attach_fake_payload
+    from video_etl_spark.streaming.dedup import (
+        compact_stream_index,
+        compaction_watermark,
+        make_batch_handler,
+        prune_folded_partitions,
+        refold_stream_index,
+    )
+    from video_etl_spark.streaming.frame_dedup import (
+        compact_stream_frame_index,
+        make_frame_batch_handler,
+    )
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def check(table, path, upto, index_dir):
+        for sidecar in (
+            spark.table(f"{table}_watermark"),
+            spark.read.parquet(f"{path}_watermark"),
+        ):
+            assert sidecar.schema.simpleString() == (
+                "struct<upto_batch_id:bigint,index_dir:string>"
+            )
+            assert sidecar.collect() == [
+                Row(upto_batch_id=upto, index_dir=index_dir)
+            ]
+        assert compaction_watermark(spark, table) == upto
+
+    idx = str(tmp_path / "idx")
+    band = make_batch_handler(idx, str(tmp_path / "dups"))
+    band(docs([(1, "the quick brown fox jumps over the lazy dog")]), 0)
+    band(docs([(2, "maritime insurance claims under section nine")]), 1)
+    frame_idx = str(tmp_path / "frame_idx")
+    frame = make_frame_batch_handler(frame_idx, str(tmp_path / "frame_dups"))
+    frame(attach_fake_payload(docs([(1, "frame alpha")])), 0)
+    frame(attach_fake_payload(docs([(2, "frame beta")])), 1)
+    tables = ("t_wm_gen0", "t_wm_gen1", "t_wm_frame_gen0")
+    try:
+        gen0, gen1 = str(tmp_path / "gen0"), str(tmp_path / "gen1")
+        compact_stream_index(
+            spark, idx, "t_wm_gen0", gen0, upto_batch_id=0, n_buckets=4
+        )
+        check("t_wm_gen0", gen0, 0, idx)
+        refold_stream_index(
+            spark, idx, "t_wm_gen0", "t_wm_gen1", gen1, upto_batch_id=1
+        )
+        check("t_wm_gen1", gen1, 1, idx)
+        assert prune_folded_partitions(spark, idx, "t_wm_gen1") == [0, 1]
+
+        frame_gen = str(tmp_path / "frame_gen0")
+        compact_stream_frame_index(
+            spark, frame_idx, "t_wm_frame_gen0", frame_gen,
+            upto_batch_id=0, n_buckets=4,
+        )
+        check("t_wm_frame_gen0", frame_gen, 0, frame_idx)
+        assert prune_folded_partitions(
+            spark, frame_idx, "t_wm_frame_gen0"
+        ) == [0]
+    finally:
+        for t in tables:
+            for name in (t, f"{t}_watermark"):
+                spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_curation_switchover_to_compacted_index(spark, tmp_path):

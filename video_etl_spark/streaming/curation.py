@@ -137,6 +137,16 @@ def make_ingest_handler(
     a crawl batch dominated by one boilerplate page shows up as a row
     whose candidate_pairs dwarfs the rest, BEFORE the index it feeds can
     accumulate the skew.
+
+    The batch's verdict — the rejected frame, the union of the quality,
+    contamination and near-dup rejects — is computed ONCE and persisted;
+    the clean, stats and index sinks are derived from it as anti-joins.
+    Sinks are written in the order clean, rejected, occupancy, stats,
+    index: the index sink goes LAST because a write to a path makes Spark
+    re-cache every cached plan that reads that path, and the verdict
+    reads ``index_dir`` (the history leg of the near-dup gate) — writing
+    the index any earlier would make every later sink recompute the
+    whole dedup stage.
     """
     from pyspark.errors import AnalysisException
 
@@ -170,8 +180,7 @@ def make_ingest_handler(
         # persisted frames unpersist in the finally so a failed batch (the
         # retry case) does not leak cached blocks across attempts
         scored = _with_ttr(_scrubbed(batch_df)).persist()
-        decontaminated = None
-        sigs = None
+        decontaminated = sigs = rejected = None
         try:
             rej_quality = scored.filter(
                 F.col("ttr_ppm") < min_ttr_ppm
@@ -193,9 +202,9 @@ def make_ingest_handler(
                 F.lit("contaminated").alias("reason"),
                 F.col("n_overlap").cast("long").alias("detail"),
             )
-            # persisted: feeds the signature build, the survivor anti-join,
-            # and the clean-sink write — without it the shingle subtree of
-            # the decontamination join recomputes per consumer
+            # persisted: feeds the signature build and the survivor
+            # anti-join — without it the shingle subtree of the
+            # decontamination join recomputes per consumer
             decontaminated = gated.join(hits, "doc_id", "left_anti").persist()
 
             sigs = minhash_band_signatures(
@@ -251,17 +260,40 @@ def make_ingest_handler(
                 F.lit("near_dup").alias("reason"),
                 F.col("dup_of").cast("long").alias("detail"),
             )
-            dup_ids = dups.select(F.col("new_doc").alias("doc_id"))
-            survivors = decontaminated.join(dup_ids, "doc_id", "left_anti")
-            surviving_sigs = sigs.join(dup_ids, "doc_id", "left_anti")
-
-            rejected = rej_quality.unionByName(rej_contam).unionByName(
-                rej_dup
+            # the batch's verdict, computed once: every sink below reads
+            # it, and the three reject sets are disjoint, so anti-joining
+            # the whole verdict removes exactly the near-dups from the
+            # decontaminated docs and their signatures
+            rejected = (
+                rej_quality.unionByName(rej_contam)
+                .unionByName(rej_dup)
+                .persist()
             )
-
+            survivors = decontaminated.join(
+                rejected.select("doc_id"), "doc_id", "left_anti"
+            )
+            surviving_sigs = sigs.join(
+                rejected.select("doc_id"), "doc_id", "left_anti"
+            )
             clean = shard_assignments(survivors, n_shards)
 
-            for df, out in ((clean, clean_dir), (rejected, rejected_dir)):
+            sinks = [(clean, clean_dir), (rejected, rejected_dir)]
+            if occupancy_dir is not None:
+                sinks.append((band_occupancy(sigs, n_bands), occupancy_dir))
+            if stats_dir is not None:
+                from video_etl_spark.streaming.stats import batch_partial
+
+                sinks.append((batch_partial(survivors), stats_dir))
+            # only SURVIVORS' signatures join the index: a rejected
+            # near-dup must not shadow later copies of text it was itself
+            # rejected for
+            sinks.append((surviving_sigs, index_dir))
+            # sink order: clean, rejected, occupancy, stats, then the index
+            # LAST — writing a path re-caches every cached plan that reads
+            # it, the verdict included (its history leg reads index_dir),
+            # so a sink written after the index would recompute the dedup
+            # stage
+            for df, out in sinks:
                 (
                     df.withColumn("batch_id", F.lit(batch_id))
                     .write.mode("overwrite")
@@ -269,42 +301,11 @@ def make_ingest_handler(
                     .partitionBy("batch_id")
                     .parquet(out)
                 )
-            # only SURVIVORS' signatures join the index: a rejected
-            # near-dup must not shadow later copies of text it was itself
-            # rejected for
-            (
-                surviving_sigs.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(index_dir)
-            )
-            if occupancy_dir is not None:
-                (
-                    band_occupancy(sigs, n_bands)
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(occupancy_dir)
-                )
-            if stats_dir is not None:
-                from video_etl_spark.streaming.stats import batch_partial
-
-                (
-                    batch_partial(survivors)
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(stats_dir)
-                )
         finally:
             scored.unpersist()
-            if decontaminated is not None:
-                decontaminated.unpersist()
-            if sigs is not None:
-                sigs.unpersist()
+            for df in (decontaminated, sigs, rejected):
+                if df is not None:
+                    df.unpersist()
 
     return handle
 

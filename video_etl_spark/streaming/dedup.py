@@ -211,11 +211,17 @@ def _write_watermark(
     too-high value would silently exclude never-folded raw partitions
     from the tail — a permanent recall hole).  The SOURCE ``index_dir``
     is recorded too, so :func:`prune_folded_partitions` can refuse a
-    mismatched (index_dir, table) pair before deleting anything."""
-    spark.createDataFrame(
-        [(upto_batch_id, index_dir)],
-        "upto_batch_id long, index_dir string",
-    ).coalesce(1).write.mode("overwrite").option(
+    mismatched (index_dir, table) pair before deleting anything.
+
+    The row is built on the JVM from literals: ``createDataFrame`` of a
+    Python list ships the row through a Python worker, a round trip that
+    costs several times the write itself (seconds when it is the
+    process's first Python worker).  The cast keeps ``upto_batch_id`` a
+    bigint, the schema existing generations were written with."""
+    spark.range(1, numPartitions=1).select(
+        F.lit(upto_batch_id).cast("long").alias("upto_batch_id"),
+        F.lit(index_dir).alias("index_dir"),
+    ).write.mode("overwrite").option(
         "path", f"{path}_watermark"
     ).saveAsTable(f"{table}_watermark")
 

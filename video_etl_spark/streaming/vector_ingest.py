@@ -64,6 +64,7 @@ def make_vector_ingest_handler(
         batch = batch_df.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
         ).persist()
+        dups = None
         try:
             try:
                 hist = (
@@ -76,7 +77,6 @@ def make_vector_ingest_handler(
             except AnalysisException:
                 hist = None
 
-            dups = None
             if hist is not None:
                 dups = incremental_embedding_dedup(
                     batch, hist, threshold=threshold, id_col="vec_id"
@@ -94,10 +94,13 @@ def make_vector_ingest_handler(
                 pair_predicate="new_id > old_id",
             ).select("new_id", "dup_of", "max_cos")
             dups = intra if dups is None else dups.unionByName(intra)
+            # persisted: the clean, rejected and index sinks all read the
+            # verdict, which would otherwise re-run both cosine joins per
+            # sink
             dups = dups.groupBy("new_id").agg(
                 F.min("dup_of").alias("dup_of"),
                 F.max("max_cos").alias("max_cos"),
-            )
+            ).persist()
 
             rejected = dups.select(
                 F.col("new_id").alias("vec_id"),
@@ -116,6 +119,8 @@ def make_vector_ingest_handler(
                 nearest_center_col(lits).alias("center_id"),
             )
 
+            # the index goes LAST: writing a path re-caches every cached
+            # plan that reads it, and the verdict reads ``index_dir``
             for df, out in (
                 (clean, clean_dir),
                 (rejected, rejected_dir),
@@ -130,6 +135,8 @@ def make_vector_ingest_handler(
                 )
         finally:
             batch.unpersist()
+            if dups is not None:
+                dups.unpersist()
 
     return handle
 
