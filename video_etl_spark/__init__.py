@@ -27,3 +27,6 @@ Package map (see SURVEY.md §2 for the operator inventory each module covers):
 __version__ = "0.1.0"
 
 from video_etl_spark.session import get_spark, load_tables, register_views  # noqa: F401
+from video_etl_spark.session import install_worker_zip_stamps
+
+install_worker_zip_stamps()

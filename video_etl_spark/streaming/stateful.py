@@ -21,6 +21,13 @@ tests/test_streaming.py::test_stateful_timeout_emits_expiry_row drives an
 idle key to its timeout and asserts the tombstone row carries the final
 state.  The batch twin used by the correctness gate is
 operators/tracking.py.
+
+Cost note: each state partition (``spark.sql.shuffle.partitions`` of them,
+fixed by the checkpoint) is one Python-worker task per trigger, empty
+partitions included, so per-task worker overhead is paid that many times
+per micro-batch whatever the keys.  With 4 cameras on 4 partitions
+(``cam0``..``cam3``, as perfbench's vetl_stream runs it) the keys hash to
+partitions 1 and 3 only, and the two empty partitions still run a task.
 """
 
 from __future__ import annotations
